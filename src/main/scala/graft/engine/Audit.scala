@@ -30,11 +30,15 @@ final class AuditLog(dir: String, spark: SparkSession) {
     path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
   }
 
-  /** Append verdict rows stamped with run lineage. */
+  /** Append verdict rows stamped with run lineage. A run's verdicts are
+    * (parts × rules) rows, so they go out as ONE file: every later audit
+    * read lists, footer-merges and opens each file the dir holds.
+    */
   def append(verdicts: DataFrame, runId: String): Unit = {
     verdicts
       .withColumn("run_id", lit(runId))
       .withColumn("audit_ts", current_timestamp())
+      .coalesce(1)
       .write.mode(SaveMode.Append).parquet(verdictsDir)
     spark.createDataFrame(Seq((runId, java.time.Instant.now.toString)))
       .toDF("run_id", "started").write.mode(SaveMode.Append).parquet(runsDir)
@@ -59,36 +63,38 @@ final class AuditLog(dir: String, spark: SparkSession) {
     * The "(global)" scope row (uniqueness verdicts) is not a data partition
     * and never gates a resume.
     */
-  def validatedParts(): Set[String] =
-    if (!exists(verdictsDir)) Set.empty
-    else readVerdicts().select("part").distinct()
-      .collect().map(_.getString(0)).toSet - ValidationEngine.GlobalPart
+  def validatedParts(): Set[String] = latestCheckedByPart().keySet
 
   /** The `checked` row count and content fingerprint each data partition
     * had when it was LAST validated (latest audit_ts wins — a re-validated
     * partition's fresh rows supersede history). The drift detector
-    * compares these against live values. The fingerprint is None for
-    * audit rows written before the content_fp column existed, or by runs
-    * with content drift disabled — those partitions fall back to
-    * count-only drift detection.
+    * compares these against live values; the key set is the resume
+    * watermark. The fingerprint is None for audit rows written before the
+    * content_fp column existed, or by runs with content drift disabled —
+    * those partitions fall back to count-only drift detection.
+    *
+    * One scan-and-collect of the audit (a few rows per (part, rule) per
+    * run); the latest row per part is picked on the driver in the order
+    * `max(struct(audit_ts, checked, content_fp))` would rank them, nulls
+    * first. Fingerprints are decimal strings, so String order is Spark's
+    * byte order.
     */
   def latestCheckedByPart(): Map[String, (Long, Option[String])] =
     if (!exists(verdictsDir)) Map.empty
     else {
       val v = readVerdicts()
-      val withFp =
-        if (v.columns.contains("content_fp")) v
-        else v.withColumn("content_fp", lit(null).cast("string"))
-      withFp
-        .where(col("part") =!= ValidationEngine.GlobalPart)
-        .groupBy(col("part"))
-        .agg(max(struct(col("audit_ts"), col("checked"), col("content_fp")))
-          .as("latest"))
-        .select(col("part"), col("latest.checked").as("checked"),
-          col("latest.content_fp").as("content_fp"))
+      val fp =
+        if (v.columns.contains("content_fp")) col("content_fp")
+        else lit(null).cast("string")
+      val newest = Ordering.Tuple3(Ordering.Long, Ordering.Long,
+        Ordering.Option(Ordering.String))
+      v.where(col("part") =!= ValidationEngine.GlobalPart)
+        .select(col("part"), unix_micros(col("audit_ts")), col("checked"), fp)
         .collect()
-        .map(r => r.getString(0) -> (r.getLong(1), Option(r.getString(2))))
-        .toMap
+        .map(r => r.getString(0) ->
+          ((r.getLong(1), r.getLong(2), Option(r.getString(3)))))
+        .groupMapReduce(_._1)(_._2)(newest.max)
+        .map { case (p, (_, checked, f)) => p -> (checked, f) }
     }
 
   /** Physically drop all verdict rows for the given partitions — the plain-
@@ -150,37 +156,60 @@ object Audit {
     * an already-validated partition and a newly-arrived one must still flag,
     * so the uniqueness pass scans the FULL table — keys-only, column-pruned
     * passes over the unique-key columns, never the document bodies.
-    * Row/referential/stats passes stay pending-only.
+    * Row/referential counting stays pending-only.
     *
     * Resume is DRIFT-SAFE: validated partitions are trusted only while
     * their live row count still matches the audit's — a compacted, re-grown
     * or deleted partition is detected on every resume (count-only pass),
     * re-validated, and its stale verdict rows superseded. The global
-    * uniqueness verdict's `checked` count comes from those live counts (or,
-    * on a first run, from this run's own profiles), so it always describes
-    * the table the uniqueness pass actually scanned.
+    * uniqueness verdict's `checked` count comes from those live counts, so
+    * it always describes the table the uniqueness pass actually scanned.
     *
     * With `contentDrift` (the default), drift compares (row count, content
     * fingerprint) per partition — an order-independent sum of full-row
     * xxhash64 — so even a same-cardinality in-place UPDATE (same count,
     * new bytes) is caught, superseded and re-validated; count-based
-    * detection alone is blind to exactly that rewrite. COST MODEL: the
-    * fingerprint turns the resume's drift pass from a narrow
-    * partition-column scan into one full-row scan of the live table (all
-    * columns decode, but pure scan+tiny agg — no shuffle beyond one row
-    * per partition). At 10^12-row scale prefer keying drift on Iceberg
-    * snapshot/sequence ids (every rewrite visible for free) and set
-    * `contentDrift = false`; on plain parquet the fingerprint is the only
-    * guarantee, and `contentDrift = false` reverts to count-only
-    * detection with the documented UPDATE blind spot.
+    * detection alone is blind to exactly that rewrite. At 10^12-row scale
+    * prefer keying drift on Iceberg snapshot/sequence ids (every rewrite
+    * visible for free) and set `contentDrift = false`; on plain parquet
+    * the fingerprint is the only guarantee, and `contentDrift = false`
+    * reverts to count-only detection with the documented UPDATE blind
+    * spot.
+    *
+    * COST MODEL. Every run reads the audit once (one scan-and-collect)
+    * and scans the live table in at most three passes:
+    *  - the drift scan, concurrent with the audit read: one aggregate per
+    *    partition — full-row when `contentDrift` is on (all columns decode,
+    *    but pure scan + tiny agg, no shuffle beyond one row per
+    *    partition), one narrow partition-expression column when off. Its
+    *    live part set also answers "is anything pending", so a no-op
+    *    resume stops here, and its fingerprints are the ones the new
+    *    verdict rows carry;
+    *  - one fused pending aggregate over the violation-bitmask projection
+    *    `runToSink` stages: per-part row counts and, per rule, the sum of
+    *    its bit — the verdict inputs, with no violation rows materialized
+    *    and no stats pass;
+    *  - the uniqueness pass over the full table's key columns, run
+    *    concurrently with the pending aggregate.
+    * The returned `violations` and `profiles` stay lazy: a caller that
+    * reads them pays for them. The pending filter is `NOT partExpr IN
+    * (validated parts)`: it prunes partitions only where the source's
+    * partition column IS that expression. A caller that derives the part
+    * from a data column (`date_format(warc_ts, ...)` over a table whose
+    * `p_date` directory column was dropped) gets neither partition pruning
+    * nor a pushed parquet predicate, and the pending aggregate reads every
+    * row of the table to count the new ones.
     */
   def runIncremental(df: DataFrame, rules: Seq[ValidationRule],
       dims: Map[String, DataFrame], cfg: EngineConfig,
       auditDir: String, runId: String,
       contentDrift: Boolean = true): Option[ValidationResult] = {
+    import scala.concurrent.{Await, Future, ExecutionContext}
+    import scala.concurrent.duration.Duration
+    import scala.util.Try
+    implicit val ec: ExecutionContext = ValidationEngine.phaseEc
     val spark = df.sparkSession
     val audit = new AuditLog(auditDir, spark)
-    val done0 = audit.validatedParts()
 
     val partKey = coalesce(expr(cfg.partExpr).cast("string"), lit("(null)"))
 
@@ -196,44 +225,42 @@ object Audit {
     // its rows dropped outright. The live totals also become the global
     // uniqueness verdict's `checked` figure, so it always describes
     // exactly the rows the full-table uniqueness pass scanned — never a
-    // stale audit reconstruction.
-    val (done, liveTotal, drifted, liveFp): (Set[String], Option[Long],
-        Set[String], Map[String, String]) =
-      if (done0.isEmpty)
-        (done0, None, Set.empty[String], Map.empty[String, String])
-      else {
-        val fpCol =
-          if (contentDrift) contentFp(df) else lit(null).cast("string")
-        val live = df.groupBy(partKey.as("part"))
-          .agg(count(lit(1)).as("n"), fpCol.as("fp"))
-          .collect()
-          .map(r => r.getString(0) -> (r.getLong(1), Option(r.getString(2))))
-          .toMap
-        val auditCounts = audit.latestCheckedByPart()
-        // drift = count changed, or (when BOTH sides carry a fingerprint)
-        // content changed under a preserved count. A missing side (legacy
-        // audit rows, contentDrift off) degrades to count-only — never a
-        // spurious full re-validation after an upgrade.
-        val dr = done0.filter { p =>
-          (live.get(p), auditCounts.get(p)) match {
-            case (Some((ln, lf)), Some((sn, sf))) =>
-              ln != sn || (lf.isDefined && sf.isDefined && lf != sf)
-            case (lv, st) => lv.map(_._1) != st.map(_._1)
-          }
-        }
-        audit.supersede(dr)
-        (done0 -- dr, Some(live.valuesIterator.map(_._1).sum), dr,
-          live.collect { case (p, (_, Some(f))) => p -> f })
+    // stale audit reconstruction. The scan needs nothing from the audit,
+    // so it runs while the audit is read.
+    val fpCol = if (contentDrift) contentFp(df) else lit(null).cast("string")
+    val liveScan = Future {
+      df.groupBy(partKey.as("part"))
+        .agg(count(lit(1)).as("n"), fpCol.as("fp"))
+        .collect()
+        .map(r => r.getString(0) -> (r.getLong(1), Option(r.getString(2))))
+        .toMap
+    }
+    // the watermark and the drift baseline, from ONE audit read
+    val audited = Try(audit.latestCheckedByPart())
+    val live = Await.result(liveScan, Duration.Inf)
+    val latest = audited.get
+    val done0 = latest.keySet
+    // drift = count changed, or (when BOTH sides carry a fingerprint)
+    // content changed under a preserved count. A missing side (legacy
+    // audit rows, contentDrift off) degrades to count-only — never a
+    // spurious full re-validation after an upgrade.
+    val drifted = done0.filter { p =>
+      (live.get(p), latest.get(p)) match {
+        case (Some((ln, lf)), Some((sn, sf))) =>
+          ln != sn || (lf.isDefined && sf.isDefined && lf != sf)
+        case (l, st) => l.map(_._1) != st.map(_._1)
       }
+    }
+    audit.supersede(drifted)
+    val done = done0 -- drifted
 
-    // Partition pruning: the filter on partExpr is pushed to the scan, so
-    // already-validated daily partitions are never read again. NULL-part
-    // rows key as "(null)" — the same keying every pass uses — so they are
-    // validated exactly once and a NULL never poisons the isin (whose SQL
-    // semantics would otherwise drop every non-matching row).
+    // NULL-part rows key as "(null)" — the same keying every pass uses —
+    // so they are validated exactly once and a NULL never poisons the isin
+    // (whose SQL semantics would otherwise drop every non-matching row).
     val pending =
       if (done.isEmpty) df
       else df.where(!partKey.isin(done.toSeq: _*))
+    val nothingPending = (live.keySet -- done).isEmpty
 
     val uniqueRules = rules.collect { case r: graft.rules.Unique => r }
     // A DELETE-only drift leaves no pending rows yet still invalidates the
@@ -244,43 +271,59 @@ object Audit {
     // resume a true no-op.
     val globalRefreshNeeded = drifted.nonEmpty && uniqueRules.nonEmpty
 
-    if (pending.isEmpty && !globalRefreshNeeded) None
+    if (nothingPending && !globalRefreshNeeded) None
     else {
-      val rowVios = ValidationEngine.rowPass(pending, rules, dims, cfg)
       val uniqVios = uniqueRules.map(r =>
         Uniqueness.duplicateKeyViolations(df, r)) // full table
-      val violations = (Seq(rowVios) ++ uniqVios).reduce(_.unionByName(_))
+
+      // Verdict inputs, two jobs submitted together: per pending part, the
+      // row count and each row/referential rule's bit summed over the
+      // bitmask projection; per unique rule, its duplicated-key count.
+      val ruleIds = ValidationEngine.bitOrderedMeta(rules).map(_._1)
+      val none = Future.successful(Array.empty[org.apache.spark.sql.Row])
+      val pendingPass = if (nothingPending) none else Future {
+        val bitSums = ruleIds.indices.map(i =>
+          sum(shiftright(col(s"_vb${i / 64}"), i % 64).bitwiseAND(lit(1L))))
+        ValidationEngine.buildProjection(pending, rules, dims, cfg)
+          .groupBy(col("_part"))
+          .agg(count(lit(1)), bitSums: _*)
+          .collect()
+      }
+      val uniqPass = if (uniqVios.isEmpty) none else Future {
+        uniqVios.reduce(_.unionByName(_))
+          .groupBy(col("rule_id")).agg(count(lit(1)))
+          .collect()
+      }
+      // the returned frames stay lazy; their plans are built while the
+      // passes run
+      val violations = (ValidationEngine.rowPass(pending, rules, dims, cfg)
+        +: uniqVios).reduce(_.unionByName(_))
       val profiles = StatsPass.profile(pending, cfg)
-      val checked = profiles.groupBy(col("part"))
-        .agg(max(col("rowCount")).as("checked"))
+      // wait for BOTH before surfacing a failure, as runToSink does
+      val finished = Await.result(Future.sequence(
+        Seq(pendingPass, uniqPass).map(_.transform(Try(_)))), Duration.Inf)
+      val Seq(pendingRows, uniqRows) = finished.map(_.get)
+
+      val checkedByPart = pendingRows.map(r => r.getString(0) -> r.getLong(1))
+      val vioCounts =
+        (pendingRows.toSeq.flatMap(r => ruleIds.indices.map(i =>
+          (r.getString(0), ruleIds(i), r.getLong(i + 2)))) ++
+         uniqRows.map(r =>
+          (ValidationEngine.GlobalPart, r.getString(0), r.getLong(1))))
+          .groupMapReduce(t => (t._1, t._2))(_._3)(_ + _)
+          .collect { case ((p, id), n) if n > 0 => (p, id, n) }.toSeq
       val globalChecked =
         if (uniqueRules.isEmpty) None
-        else liveTotal.orElse {
-          // first run (no audit yet): pending IS the full table the
-          // uniqueness pass scanned. Count it DIRECTLY — pending.count()
-          // on a partition-pruned parquet read resolves from row-group
-          // metadata; summing this run's `checked` instead would eagerly
-          // execute the whole stats aggregation (HLL + quantiles over
-          // every column) here and then AGAIN when the verdicts/profiles
-          // materialize, doubling the most expensive phase. On resumes
-          // the drift pass above has already paid for live counts and
-          // liveTotal is authoritative.
-          Some(pending.count())
-        }
-      val verdicts0 = ValidationEngine.assembleVerdicts(
-        spark, rules, violations, checked, globalChecked)
+        else Some(live.valuesIterator.map(_._1).sum)
+      val verdicts0 = ValidationEngine.assembleVerdicts(spark, rules,
+        spark.createDataFrame(vioCounts).toDF("part", "rule_id", "violations"),
+        spark.createDataFrame(checkedByPart.toSeq).toDF("part", "checked"),
+        globalChecked)
       // Stamp each data partition's verdict rows with its content
-      // fingerprint — the resume's drift compare reads it back. Resumes
-      // already paid for the fingerprints in the drift pass above; only a
-      // FIRST run (no audit yet) computes them here, over pending (= the
-      // whole table on that run). The "(global)" row carries NULL: it
-      // describes a cross-partition scan, not a partition's bytes.
-      val fpByPart: Map[String, String] =
-        if (!contentDrift) Map.empty
-        else if (liveFp.nonEmpty) liveFp
-        else pending.groupBy(partKey.as("part"))
-          .agg(contentFp(pending).as("fp"))
-          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      // fingerprint from the drift scan — the next resume's drift compare
+      // reads it back. The "(global)" row carries NULL: it describes a
+      // cross-partition scan, not a partition's bytes.
+      val fpByPart = live.collect { case (p, (_, Some(f))) => p -> f }
       val verdicts =
         if (fpByPart.isEmpty)
           verdicts0.withColumn("content_fp", lit(null).cast("string"))

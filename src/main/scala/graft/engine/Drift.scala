@@ -82,18 +82,4 @@ object Drift {
         DriftReport(part, basePart, "ks", column, k, ksThreshold, k <= ksThreshold))
     }
   }
-
-  /** Null-rate drift from the stats profile (reference analog: the planted
-    * inflated-null-rate partition in FIXTURES.md).
-    */
-  def nullRateDrift(profiles: DataFrame, column: String,
-      delta: Double = 0.05): Seq[DriftReport] = {
-    val rows = profiles.where(profiles("column") === column)
-      .select("part", "nullRate").collect()
-      .map(r => (r.getString(0), r.getDouble(1))).sortBy(_._1)
-    rows.sliding(2).collect { case Array((p0, r0), (p1, r1)) =>
-      val d = math.abs(r1 - r0)
-      DriftReport(p1, p0, "null_rate_delta", column, d, delta, d <= delta)
-    }.toSeq
-  }
 }

@@ -68,7 +68,7 @@ object ValidationEngine {
     * (Spark schedules concurrent jobs fine; the pool only parks on
     * write() actions).
     */
-  private lazy val phaseEc: scala.concurrent.ExecutionContext =
+  private[engine] lazy val phaseEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(
       java.util.concurrent.Executors.newCachedThreadPool(r => {
         val t = new Thread(r, "graft-phase")
@@ -159,7 +159,8 @@ object ValidationEngine {
     // checked = total rows.
     val checked = profiles
       .groupBy(col("part")).agg(max(col("rowCount")).as("checked"))
-    val verdicts = assembleVerdicts(df.sparkSession, rules, violations, checked)
+    val verdicts = assembleVerdicts(df.sparkSession, rules,
+      violationCounts(violations), checked)
 
     ValidationResult(violations, verdicts, profiles)
   }
@@ -168,10 +169,11 @@ object ValidationEngine {
     * referential — the contract between [[buildProjection]]'s bitmask and
     * [[bitsToViolations]]'s reconstruction.
     */
-  private def bitOrderedMeta(rowRules: Seq[RowRule],
-      refRules: Seq[Referential]): Seq[(String, String, String, String)] =
-    rowRules.map(r => (r.ruleId, r.path, RuleCompiler.message(r), r.severity)) ++
-      refRules.map(r => (r.ruleId, r.path, RuleCompiler.message(r), r.severity))
+  private[engine] def bitOrderedMeta(rules: Seq[ValidationRule])
+      : Seq[(String, String, String, String)] =
+    (rules.collect { case r: RowRule => r } ++
+      rules.collect { case r: Referential => r })
+      .map(r => (r.ruleId, r.path, RuleCompiler.message(r), r.severity))
 
   /** The compact per-row projection everything derives from: key, part,
     * per-rule violation BITMASK (one long per 64 rules — all
@@ -180,7 +182,7 @@ object ValidationEngine {
     * One decode of the (wide) source; the projection carries ~tens of
     * fixed-width bytes per row — no document bodies, no nested types.
     */
-  private def buildProjection(df: DataFrame, rules: Seq[ValidationRule],
+  private[engine] def buildProjection(df: DataFrame, rules: Seq[ValidationRule],
       dims: Map[String, DataFrame], cfg: EngineConfig): DataFrame = {
     val rowRules = rules.collect { case r: RowRule => r }
     val refRules = rules.collect { case r: Referential => r }
@@ -274,9 +276,7 @@ object ValidationEngine {
       s"unknown stage strategy '${cfg.stage}'")
     val spark = df.sparkSession
     val uniqueRules = rules.collect { case r: Unique => r }
-    val rowRules = rules.collect { case r: RowRule => r }
-    val refRules = rules.collect { case r: Referential => r }
-    val meta = bitOrderedMeta(rowRules, refRules)
+    val meta = bitOrderedMeta(rules)
 
     val projection0 = buildProjection(df, rules, dims, cfg)
     val projection =
@@ -373,7 +373,7 @@ object ValidationEngine {
       val profiles = spark.read.parquet(s"$sinkDir/profiles")
       val checked = profiles.groupBy(col("part"))
         .agg(max(col("rowCount")).as("checked"))
-      assembleVerdicts(spark, rules, violations, checked)
+      assembleVerdicts(spark, rules, violationCounts(violations), checked)
         .write.mode("overwrite").parquet(s"$sinkDir/verdicts")
 
       ValidationResult(violations,
@@ -416,25 +416,32 @@ object ValidationEngine {
     val profiles = spark.read.parquet(s"$sinkDir/profiles")
     val checked = profiles.groupBy(col("part"))
       .agg(max(col("rowCount")).as("checked"))
-    assembleVerdicts(spark, rules, violations, checked)
+    assembleVerdicts(spark, rules, violationCounts(violations), checked)
       .write.mode("overwrite").parquet(s"$sinkDir/verdicts")
     ValidationResult(violations,
       spark.read.parquet(s"$sinkDir/verdicts"), profiles)
   }
 
+  /** Violation rows → per-(part, rule_id) counts, the input of
+    * [[assembleVerdicts]].
+    */
+  private def violationCounts(violations: DataFrame): DataFrame =
+    violations.groupBy(col("part"), col("rule_id"))
+      .agg(count(lit(1)).as("violations"))
+
   /** Per-partition verdicts for partition-scoped rules; one "(global)"
     * verdict per global rule (uniqueness) with checked = total rows.
+    * `vioCounts` holds (part, rule_id, violations), one row per pair that
+    * has violations; a (part, rule) pair without a row passes with 0.
     * `globalChecked` overrides the global rules' checked count for callers
     * whose uniqueness pass scanned more rows than the per-partition passes
     * (incremental resume runs uniqueness over the FULL table).
     */
   private[engine] def assembleVerdicts(spark: SparkSession,
-      rules: Seq[ValidationRule], violations: DataFrame,
+      rules: Seq[ValidationRule], vioCounts: DataFrame,
       checked: DataFrame, globalChecked: Option[Long] = None): DataFrame = {
     val uniqueIds = rules.collect { case r: Unique => r.ruleId }
     val partRules = rules.filterNot(r => uniqueIds.contains(r.ruleId))
-    val vioCounts = violations.groupBy(col("part"), col("rule_id"))
-      .agg(count(lit(1)).as("violations"))
 
     val partVerdicts = {
       val rulesDf = spark.createDataFrame(partRules.map(r => Tuple1(r.ruleId)))

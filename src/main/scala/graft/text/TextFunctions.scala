@@ -95,13 +95,6 @@ object TextFunctions {
       regexp_count(c, lit("[\\p{N}]")).cast("double") / n)
   }
 
-  def meanWordLength(c: Column): Column = {
-    val toks = tokens(c)
-    when(size(toks) === 0, 0.0).otherwise(
-      aggregate(toks, lit(0L), (acc, w) => acc + length(w)).cast("double") /
-        size(toks))
-  }
-
   /** Composite quality score in [0,1] — length, stopword, punctuation and
     * digit signals (the usual pretraining-filter features). Deterministic,
     * documented weights; callers threshold it (e.g. keep > 0.3).

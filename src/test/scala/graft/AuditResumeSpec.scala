@@ -248,19 +248,31 @@ class AuditResumeSpec extends SparkSuite {
     // audit's final verdict state (latest per partition + the fresh
     // run's global row) must equal ValidationEngine.run on the mutated
     // full table — drift handling may never change WHAT is true, only
-    // how little work re-establishes it.
+    // how little work re-establishes it. Three catalogs: a small one; the
+    // pages catalog with its hosts dim (row, referential and unique rules
+    // together); and more than 64 row rules, so the resume's per-rule
+    // counts read the projection's second bitmask word.
     val rnd = new scala.util.Random(4242)
-    val rules = Seq(graft.rules.Required("url_required", "url"),
+    val small = Seq(graft.rules.Required("url_required", "url"),
       graft.rules.Allowed("lang_allowed", "lang",
         Seq("en", "de", "fr", "es", "zh")),
       graft.rules.Unique("unique_url", Seq("url")))
+    val neverFires = "url_max_1m"
+    val wide = graft.rules.Required("url_required", "url") +:
+      (0 until 66).map(i => graft.rules.ExprRule(s"url_hash_mod_$i", "url",
+        s"pmod(hash(url), ${i + 2}) <> 0")) :+
+      graft.rules.MaxLength(neverFires, "url", 1 << 20)
+    val catalogs = Seq(("small", small, false),
+      ("pages", PagesRules.catalog, true), ("wide", wide, false))
 
-    for (trial <- 1 to 3) {
-      val dir = Files.createTempDirectory(s"audit_prop$trial").toString
+    for (trial <- 1 to 3; (name, rules, withHosts) <- catalogs) {
+      val dir = Files.createTempDirectory(s"audit_prop${trial}_$name").toString
       val data = PagesGen.generate(spark, nRows = 3000L, nDays = 3)
+      val dims: Map[String, org.apache.spark.sql.DataFrame] =
+        if (withHosts) Map("hosts" -> data.hosts) else Map.empty
       val base = data.pages.where(year($"warc_ts") === 2024)
         .localCheckpoint(true)
-      assert(Audit.runIncremental(base, rules, Map.empty, cfg, dir,
+      assert(Audit.runIncremental(base, rules, dims, cfg, dir,
         s"t${trial}_run1").isDefined)
 
       val parts = base.select(date_format($"warc_ts", "yyyy-MM-dd"))
@@ -276,12 +288,12 @@ class AuditResumeSpec extends SparkSuite {
         .unionByName(extra)
         .localCheckpoint(true)
 
-      val r2 = Audit.runIncremental(mutated, rules, Map.empty, cfg, dir,
+      val r2 = Audit.runIncremental(mutated, rules, dims, cfg, dir,
         s"t${trial}_run2")
-      assert(r2.isDefined, s"trial $trial: drift not detected")
+      assert(r2.isDefined, s"trial $trial $name: drift not detected")
 
       // ground truth: clean full run on the mutated table
-      val clean = ValidationEngine.run(mutated, rules, Map.empty, cfg)
+      val clean = ValidationEngine.run(mutated, rules, dims, cfg)
       def canon(df: org.apache.spark.sql.DataFrame): Set[(String, String, Long, Long)] =
         df.select($"part", $"rule_id", $"checked", $"violations")
           .as[(String, String, Long, Long)].collect().toSet
@@ -289,8 +301,56 @@ class AuditResumeSpec extends SparkSuite {
       // audit state: latest verdict row per (part, rule) — per-partition
       // rows are superseded in place; the global row's latest run (by
       // audit_ts) is the resume's, which reflects live counts
-      assert(canon(clean.verdicts) === canonLatest(audit), s"trial $trial")
+      val latest = canonLatest(audit)
+      assert(canon(clean.verdicts) === latest, s"trial $trial $name")
+      if (name == "wide") {
+        // a rule that never fires still gets one passing row per part
+        val never = latest.filter(_._2 == neverFires)
+        assert(never.map(_._1) === parts.toSet - drop, s"trial $trial")
+        assert(never.forall(_._4 == 0L), s"trial $trial")
+        assert(latest.exists(v => v._2 == "url_hash_mod_65" && v._4 > 0L))
+      }
     }
+  }
+
+  test("no-op resume: one audit read and one drift scan, no pending scan") {
+    import org.apache.spark.scheduler._
+    val root = Files.createTempDirectory("audit_jobs").toString
+    val data = PagesGen.generate(spark, nRows = 2000L, nDays = 2)
+    data.pages.where(year($"warc_ts") === 2024)
+      .write.parquet(s"$root/table")
+    // resolved (schema read) before the listener starts counting
+    val table = spark.read.parquet(s"$root/table")
+    val tableRows = table.count()
+    def resume(runId: String) = Audit.runIncremental(table,
+      PagesRules.catalog, Map("hosts" -> data.hosts), cfg, s"$root/audit",
+      runId)
+    assert(resume("run1").isDefined)
+    val auditRows = new AuditLog(s"$root/audit", spark).verdicts().count()
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val rowsRead = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics)
+          .foreach(m => rowsRead.addAndGet(m.inputMetrics.recordsRead))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      assert(resume("run2").isEmpty)
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    // the audit read (footer merge + scan) and the drift scan (map stage +
+    // result stage)
+    assert(jobs.get <= 4, s"no-op resume ran ${jobs.get} jobs")
+    // the table is read once, by the drift scan: no emptiness probe and no
+    // pending pass over it
+    assert(rowsRead.get <= tableRows + auditRows,
+      s"no-op resume read ${rowsRead.get} rows; table $tableRows, audit $auditRows")
   }
 
   private def canonLatest(audit: AuditLog): Set[(String, String, Long, Long)] = {
